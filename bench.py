@@ -6,17 +6,12 @@ T6 cleaning pipeline, the heavy relational/dedup/sessionization paths,
 and the composed 10-stage training pipeline) at $SPARK_GRAFT_SF_DIR
 (default sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Round-over-round discipline (r7, protocol fixed r13):
-- a FROZEN calibration workload runs first (`extra.calib_sec`) so host
-  drift can be separated from code cost — identical r6 code measured
-  30.44 s at round-6 time and 33.60 s at round-7 start on this box;
-- r13 (r12 verdict #2: the session-bracket denominator contradicted
-  raw totals): a frozen ~0.1 s probe is interleaved before EVERY
-  headline repetition and `queries_calibrated` (median of
-  rep/adjacent-probe, on stdout AND in extras) is the cross-round
-  trend series; raw seconds remain the primary same-session signal
-  with an explicit ±30% host-drift band (`calib_spread`/`calib_drift`
-  quantify the box's own movement);
+Round-over-round discipline (protocol fixed r13):
+- a frozen ~0.1 s probe is interleaved before EVERY headline
+  repetition and `queries_calibrated` (median of rep/adjacent-probe,
+  on stdout AND in extras) is the cross-round trend series, so host
+  drift can be separated from code cost; raw seconds remain the
+  primary same-session signal;
 - headline queries exercise the engine's SELF-TUNING defaults (auto IVF
   lists + nprobe sweep to recall ≥ 0.9, auto SemDeDup k, dim-aware SRP
   banding) and the chosen configs are echoed in extras;
@@ -42,8 +37,8 @@ Output contract (r8): the stdout JSON line carries ONLY
 {metric, value, unit, queries{name: sec}, sf, extra_file} and is
 asserted < 1,800 chars — round 7's line grew past the driver's
 2,000-char tail window and the round lost its perf artifact
-(BENCH_r07.json parsed:null).  The full extras block (calibration,
-per-calib ratios, IVF/PQ/streaming/analytics telemetry) is written to
+(BENCH_r07.json parsed:null).  The full extras block (probe medians,
+calibrated band, IVF/PQ/streaming/analytics telemetry) is written to
 BENCH_EXTRA.json next to this file and committed with the round — diff
 that sidecar mechanically.
 """
@@ -89,58 +84,15 @@ BENCH_QUERIES = [
 ]
 
 
-def _calibration_runs(spark, n_runs: int = 5) -> list[float]:
-    """FROZEN reference workload — never change the WORKLOAD inside this
-    function: its time prices the box+JVM each round (hash + shuffle +
-    agg over a generated range, no I/O, no engine code under test), so
-    round-over-round query diffs can be separated from environment
-    drift.  Motivated by round 7's re-baseline: rerunning round 6's
-    identical headline code measured 33.60 s vs the 30.44 s recorded at
-    round-6 time and 27.92 s at round 5 — ~10%/round inflation on
-    untouched code, i.e. host drift that per-query attribution cannot
-    explain.
-
-    r10 (r9 verdict #5): the denominator was a single min-of-3 sample
-    that swung ±30% between same-code runs and dominated the per-calib
-    ratios it was meant to stabilize.  Now returns ALL run times after
-    ONE untimed warmup execution (the first-ever run pays JIT — measured
-    1.52 s vs 0.48-0.53 s steady state — which would poison the spread
-    metric); the caller takes the MEDIAN of 5 as the denominator and
-    echoes the raw runs + spread so the ratio's own noise is
-    measurable."""
-    from pyspark.sql import functions as F
-
-    runs: list[float] = []
-    for i in range(n_runs + 1):
-        t0 = time.time()
-        (
-            spark.range(0, 20_000_000, 1, 32)
-            .select(
-                (F.col("id") % 1000).alias("k"),
-                (F.pmod(F.xxhash64("id"), F.lit(1_000_000))).alias("h"),
-            )
-            .groupBy("k")
-            .agg(F.sum("h").alias("s"), F.count("*").alias("c"))
-            .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-        if i > 0:  # run 0 is the untimed JIT warmup
-            runs.append(round(time.time() - t0, 3))
-    return runs
-
-
 def _probe_run(spark) -> float:
-    """FROZEN per-query calibration probe (r12 verdict #2: the session-
-    bracketing calibration and the raw totals contradicted each other —
-    calib said the host was 1.3× faster while raw rose 3.6%, because the
-    denominator was sampled at the session's ENDS, not next to each
-    measurement).  Same workload family as :func:`_calibration_runs` at
-    1/4 the rows (~0.1 s): cheap enough to interleave before EVERY
-    headline repetition, fixed forever so per-query calibrated medians
-    (query_time / adjacent_probe_time) compare across rounds without a
-    shared-session denominator.  Never change the workload."""
+    """FROZEN per-query calibration probe: hash + shuffle + agg over a
+    generated range (no I/O, no engine code under test), ~0.1 s — cheap
+    enough to interleave before EVERY headline repetition, fixed forever
+    so per-query calibrated medians (query_time / adjacent_probe_time)
+    compare across rounds.  A denominator sampled next to each
+    measurement, not at the session's ends (r12 verdict #2: a
+    session-bracketing calibration said the host was 1.3× faster while
+    raw rose 3.6%).  Never change the workload."""
     from pyspark.sql import functions as F
 
     t0 = time.time()
@@ -977,13 +929,10 @@ def _linkgraph_bloom_section(spark, sf_dir: str) -> dict[str, object]:
     # serving shape: a probe plan is reused across batches; the literal
     # tier's 749-word array literal costs driver-side construction that
     # would otherwise dominate the sub-second execution being measured)
-    words_df = BL.bloom_build_words(prev, "url", m, k).persist()
-    words_df.count()  # materialize outside the timed probe window
     tiers = {
         "literal": probe.select(
             BL.bloom_contains_expr("url", words, m, k).alias("h")
         ),
-        "join": BL.bloom_contains_join(probe, "url", words_df, m, k),
         "udf": BL.bloom_contains_udf(probe, "url", words, m, k),
     }
     for tier, frame in tiers.items():
@@ -994,29 +943,20 @@ def _linkgraph_bloom_section(spark, sf_dir: str) -> dict[str, object]:
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         extra[f"bloom_probe_{tier}_sec"] = round(best, 3)
-    words_df.unpersist()
-    # r12 mid-band pricing (m = 2^27, the join tier's design point: the
-    # plan literal would be 16 MB, so only the join and Arrow tiers
-    # serve here).  The word frame stays SPARSE (<= n_prev*k rows).
+    # r12 mid-band pricing (m = 2^27: the plan literal would be 16 MB, so
+    # only the Arrow tier serves here).  The word frame stays SPARSE
+    # (<= n_prev*k rows).
     m_big, k_big = 1 << 27, 7
-    words_big_df = BL.bloom_build_words(prev, "url", m_big, k_big).persist()
-    extra["bloom_m27_words"] = int(words_big_df.count())
-    dense = [0] * (m_big // 32)
-    for r in words_big_df.collect():
-        dense[r["word_idx"]] = r["word"]
-    big_tiers = {
-        "join": BL.bloom_contains_join(probe, "url", words_big_df, m_big, k_big),
-        "udf": BL.bloom_contains_udf(probe, "url", dense, m_big, k_big),
-    }
-    for tier, frame in big_tiers.items():
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            _run(frame)
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        extra[f"bloom_m27_probe_{tier}_sec"] = round(best, 3)
-    words_big_df.unpersist()
+    dense = BL.bloom_build(prev, "url", m_big, k_big)
+    extra["bloom_m27_words"] = sum(1 for w in dense if w)
+    big_probe = BL.bloom_contains_udf(probe, "url", dense, m_big, k_big)
+    best = None
+    for _ in range(2):
+        t0 = time.time()
+        _run(big_probe)
+        dt = time.time() - t0
+        best = dt if best is None else min(best, dt)
+    extra["bloom_m27_probe_udf_sec"] = round(best, 3)
     odds = docs.where(F.col("doc_id") % 2 == 1).select(url.alias("url"))
     n_odds = odds.count()
     n_fp = odds.where(BL.bloom_contains_expr("url", words, m, k)).count()
@@ -1142,15 +1082,6 @@ def _warc_section(spark, sf_dir: str) -> dict[str, object]:
     }
 
 
-# The three small fixed-overhead joins whose per-calib ratios crept
-# +10-18% in both independent r9 runs with no code change on their paths
-# (r9 verdict #6).  They are re-timed FRESH — immediately after warmup,
-# before any other engine query has touched the JVM — so the in-position
-# headline minus the fresh number mechanically prices the bench-order /
-# JVM-state effect instead of leaving the drift unattributed.
-SMALLJOIN_PACK = ["pricing_summary", "knn_join_multi", "asof_join_purchase_click"]
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -1161,36 +1092,6 @@ def main() -> None:
 
     for t in ("lineitem", "events", "documents", "embeddings"):
         load_table(spark, sf_dir, t).count()
-
-    # box calibration FIRST (after warmup, before any query): a frozen
-    # workload whose time moves only with the environment.  r10 (r9
-    # verdict #5): the old single min-of-3 point sample swung ±30%
-    # between same-code runs and dominated every per-calib ratio.  Now
-    # the session is BRACKETED — 5 timed runs (after one untimed JIT
-    # warmup) here and 5 more after the last query — and the denominator
-    # is the median of all 10, so it averages the session window instead
-    # of sampling its first instant; the raw runs, spread, and the
-    # end/start drift are echoed so the denominator's remaining noise is
-    # a number, not a surprise.  Back-to-back r10 measurement: the BOX
-    # itself drifts 12-16% between whole bench sessions (calib medians
-    # 0.415 vs 0.364, raw totals 41.1 vs 35.4 s on identical code), so
-    # per-calib ratios carry ±10-20% noise floor from the numerator's
-    # min-of-2/3 sampling alone — compare trends, not single deltas.
-    # calib_min3_sec keeps the r5-r9 trend line comparable.
-    calib_runs = _calibration_runs(spark)
-    calib_min3 = min(calib_runs[:3])
-
-    # fresh-JVM small-join pack (r9 verdict #6): min-of-3 at session-
-    # fresh position, before any other engine query
-    smalljoin_fresh: dict[str, float] = {}
-    for name in SMALLJOIN_PACK:
-        best = None
-        for _ in range(3):
-            t0 = time.time()
-            _run(QUERIES[name](spark, sf_dir))
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        smalljoin_fresh[name] = round(best, 3)
 
     # min of 2 runs per query: single-run numbers on this box swing ±20%
     # (JIT, page cache, GC); the min is the stable capability estimate and
@@ -1439,11 +1340,8 @@ def main() -> None:
         semdedup_fixed8 = dt if semdedup_fixed8 is None else min(semdedup_fixed8, dt)
 
     # r14 (r13 verdict #3): the calibrated drift band.  queries_calibrated
-    # (adjacent-probe medians) is THE cross-round series — the session
-    # bracket below is diagnostics only (r13 showed bracket and probes
-    # can disagree: calib_runs/calib_end_runs carried a 1.45x warm-up
-    # slope while the per-query probes sat flat).  The acceptance band:
-    # per-query calibrated ratio vs the committed baseline > 1.3 =
+    # (adjacent-probe medians) is THE cross-round series.  The acceptance
+    # band: per-query calibrated ratio vs the committed baseline > 1.3 =
     # investigate, > 2.0 = weak.  The baseline file is re-stamped each
     # round from the archived run so the band always compares one round
     # back.
@@ -1466,50 +1364,9 @@ def main() -> None:
                 elif r > CAL_INVESTIGATE:
                     cal_flags[name] = "investigate"
 
-    # end-bracket calibration: same frozen workload, after the last query
-    calib_end_runs = _calibration_runs(spark)
-    all_calib = sorted(calib_runs + calib_end_runs)
-    calib_sec = all_calib[len(all_calib) // 2]
-    calib_spread = round((all_calib[-1] - all_calib[0]) / calib_sec, 3)
-    calib_drift = round(med(calib_end_runs) / med(calib_runs), 3)
-
     total = round(sum(timings.values()), 3)
     extra = {
-        "schema_version": 4,
-        # frozen-workload box calibration: divide any query's
-        # time by calib_sec before comparing across rounds —
-        # round 7 measured IDENTICAL r6 headline code at
-        # 33.60 s vs the 30.44 s recorded at round-6 time and
-        # r5's 27.92 s (drift_identical_code_* below), so raw
-        # round-over-round diffs conflate host drift with code.
-        # calib_sec is the MEDIAN of the session-bracketing runs
-        # (5 at start + 5 after the last query) since r10;
-        # calib_min3_sec is the legacy min-of-3 for the r5-r9
-        # trend line
-        "calib_sec": calib_sec,
-        "calib_def": "median_of_10_bracketed (r10; r5-r9 was min_of_3 = calib_min3_sec)",
-        "calib_runs": calib_runs,
-        "calib_end_runs": calib_end_runs,
-        "calib_min3_sec": calib_min3,
-        "calib_spread": calib_spread,
-        "calib_drift_within_run": calib_drift,
-        "drift_identical_code_r6_rerun_total_sec": 33.603,
-        # r9 verdict #6: the small-join pack timed FRESH (before any
-        # other engine query) vs its in-position headline number —
-        # the delta prices the bench-order / JVM-state effect
-        "smalljoin_fresh_secs": smalljoin_fresh,
-        "smalljoin_inposition_minus_fresh_secs": {
-            k: round(timings[k] - v, 3) for k, v in smalljoin_fresh.items()
-        },
-        # calib-relative per-query ratios (r7 verdict #4) — LEGACY
-        # series normalized by the session-bracket median; r12 verdict
-        # #2 showed this denominator can contradict raw totals (it
-        # samples the session's ends, not the moment of measurement).
-        # Kept for the r7-r12 trend line; cross-round claims should
-        # use queries_calibrated (adjacent-probe medians) instead.
-        "queries_per_calib": {
-            k: round(v / calib_sec, 3) for k, v in timings.items()
-        },
+        "schema_version": 5,
         # r13 protocol (r12 verdict #2): a frozen ~0.1 s probe runs
         # immediately before every repetition; queries_calibrated is
         # the per-query MEDIAN of (rep_time / adjacent_probe_time) —
@@ -1528,8 +1385,7 @@ def main() -> None:
         "calibrated_band_def": (
             f"cur/prev calibrated median vs r{cal_base_round} baseline; "
             f">{CAL_INVESTIGATE} investigate, >{CAL_WEAK} weak; "
-            "queries_calibrated is the ONLY cross-round series — the "
-            "session bracket (calib_runs/calib_end_runs) is diagnostics"
+            "queries_calibrated is the ONLY cross-round series"
         ),
         "calibrated_ratio_vs_prev": cal_ratios,
         "calibrated_band_flags": cal_flags,

@@ -1,4 +1,4 @@
-"""Deterministic hashing / shingling primitives for dedup + fingerprints.
+"""Deterministic hashing primitives for dedup + fingerprints.
 
 All engine-internal hashes use Spark's built-ins (xxhash64 / crc32 /
 murmur hash) — JVM-side, codegen'd.  Where a DuckDB oracle must reproduce
@@ -22,28 +22,6 @@ POLY_MOD = 2_147_483_647
 
 def _c(col: ColumnOrName) -> Column:
     return F.col(col) if isinstance(col, str) else col
-
-
-def char_shingles(col: ColumnOrName, n: int = 5) -> Column:
-    """All overlapping character n-grams of a string, as an array.
-
-    Native expression: sequence over start offsets + substring — no UDF.
-    Empty/short strings yield a single shingle of the whole string.
-    """
-    s = _c(col)
-    ln = F.length(s)
-    starts = F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(1)))
-    return F.transform(starts, lambda i: s.substr(i, F.lit(n)))
-
-
-def word_ngrams(tokens: ColumnOrName, n: int = 3) -> Column:
-    """Word n-grams (space-joined) from a token array."""
-    t = _c(tokens)
-    cnt = F.size(t)
-    starts = F.sequence(F.lit(0), F.greatest(cnt - F.lit(n), F.lit(0)))
-    return F.when(cnt < n, F.array(F.array_join(t, " "))).otherwise(
-        F.transform(starts, lambda i: F.array_join(F.slice(t, i + 1, n), " "))
-    )
 
 
 def md5_hash32(col: ColumnOrName) -> Column:
@@ -71,19 +49,3 @@ def poly_hash(col: ColumnOrName) -> Column:
         lambda acc, cp: (acc * F.lit(POLY_BASE) + cp) % F.lit(POLY_MOD),
     )
 
-
-def minhash_signature(shingle_hashes: ColumnOrName, seeds: list[tuple[int, int]]) -> Column:
-    """MinHash signature: for each (a,b) seed, min over shingle hashes of
-    (a*h + b) % POLY_MOD.  Input is an array of int64 shingle hashes."""
-    h = _c(shingle_hashes)
-    return F.array(
-        *[
-            F.array_min(F.transform(h, lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(POLY_MOD)))
-            for a, b in seeds
-        ]
-    )
-
-
-def xxhash_tokens(tokens: ColumnOrName) -> Column:
-    """xxhash64 per token — engine-internal fast path (not oracle-portable)."""
-    return F.transform(_c(tokens), lambda t: F.xxhash64(t))

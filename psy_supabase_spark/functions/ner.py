@@ -160,9 +160,9 @@ def entity_extractor():
     the spaCy NER pandas UDF (NotImplementedError if spaCy is missing —
     an enabled flag must never silently degrade); else the deterministic
     native stub `extract_entities`.  Both produce ``array<string>``."""
-    import os
+    from ..operators.ml_udfs import real_models_enabled
 
-    if os.environ.get("PSY_REAL_MODELS") == "1":
+    if real_models_enabled():
         return spacy_ner_udf()
     return extract_entities
 

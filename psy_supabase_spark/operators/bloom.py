@@ -16,7 +16,7 @@ repo (`functions/hashing.md5_hash32`): a DuckDB oracle reproduces every
 position — and therefore every membership verdict, INCLUDING the false
 positives — bit-for-bit.
 
-Three serving tiers, row-identical by construction and by test:
+Two serving tiers, row-identical by construction and by test:
 
 - **literal tier** (`bloom_contains_expr`): the m/32-word bitmap is
   inlined as an array literal and membership is pure Catalyst
@@ -24,16 +24,13 @@ Three serving tiers, row-identical by construction and by test:
   for small-to-medium filters (m ≲ 2^22: a 128 KB plan constant) —
   e.g. a benchmark-decontam set or a blocklist — and it is the
   oracle-gateable spelling.
-- **join tier** (`bloom_contains_join`, r12): probe against the word
-  FRAME itself via a broadcast hash join — no plan literal, no Python.
-  The mid-size band (m ≈ 2^22..2^30, word frame ≤ tens of MB) where
-  the literal tier's plan constant bloats and the Arrow tier's per-row
-  hashlib would put a billion-key frontier probe in Python.
 - **numpy tier** (`bloom_contains_udf`): the bitmap rides a Spark
   broadcast variable into an Arrow-batched pandas UDF that recomputes
-  the same md5 positions with hashlib.  Right at extreme scale (m up
-  to tens of billions of bits), where even the word frame's broadcast
-  exchange is better paid once as raw bytes.
+  the same md5 positions with hashlib.  Right once the bitmap outgrows
+  a sane plan constant (m from 2^22 up to tens of billions of bits).
+  A broadcast join against the word frame is not offered: it cost
+  about twice this tier's CPU at both m = 24k bits and m = 2^27 on a
+  5k-row probe, with identical verdicts.
 
 The distributed build (`bloom_build_words`) never materializes
 positions on the driver: explode k positions per key, map to
@@ -173,66 +170,6 @@ def bloom_contains_expr(
             != 0
         )
     return cond
-
-
-def bloom_contains_join(
-    df: DataFrame,
-    col: str,
-    words_df: DataFrame,
-    m_bits: int,
-    k: int,
-    *,
-    out_col: str = "bloom_hit",
-) -> DataFrame:
-    """Join-tier membership: probe against the WORD FRAME
-    (:func:`bloom_build_words` output) via a broadcast hash join — no
-    plan literal (the literal tier's ~2^22-bit cap), no Python (the
-    Arrow tier's per-row hashlib), bitmap bounded by m/32 rows.  The
-    mid-size sweet spot (m ≈ 2^22..2^30): a frontier-scale probe stays
-    entirely inside whole-stage codegen + one broadcast exchange.
-
-    Shape: ONE linear lineage (the robots_allowed/_rid pattern —
-    monotonically_increasing_id minted once, no self-join back-join, so
-    task retries cannot mispair rows): explode the k (word_idx, mask)
-    probe rows per key, left-join the broadcast word frame on
-    word_idx, and a key is a member iff ALL k masks land on set bits
-    (min over the per-position hit flags).  Null keys yield null, like
-    both sibling tiers.
-
-    Row-identical to :func:`bloom_contains_expr` and
-    :func:`bloom_contains_udf` by construction (same md5 double-hash
-    positions) and by test — false positives included."""
-    # _rid minted in its OWN projection: a select mixing the id with a
-    # generator evaluates the id per EXPLODED row (observed: 3 ids per
-    # key), which breaks the group-back — two stages keep it per-key
-    base = df.select(
-        F.monotonically_increasing_id().alias("_rid"),
-        F.struct(*df.columns).alias("_row"),
-        _c(col).alias("_key"),
-    )
-    l = base.select(
-        "_rid",
-        "_row",
-        F.explode(bloom_positions("_key", m_bits, k)).alias("_pos"),
-    ).select(
-        "_rid",
-        "_row",
-        F.shiftright(F.col("_pos"), 5).cast("int").alias("word_idx"),
-        _bit_mask(F.col("_pos")).alias("_mask"),
-    )
-    w = F.broadcast(
-        words_df.select("word_idx", F.col("word").alias("_word"))
-    )
-    joined = l.join(w, "word_idx", "left")
-    # null key -> null positions -> null hit flags -> min() null -> null
-    hit = (
-        F.coalesce(F.col("_word"), F.lit(0)).bitwiseAND(F.col("_mask")) != 0
-    ).cast("int")
-    return (
-        joined.groupBy("_rid", "_row")
-        .agg(F.min(hit).alias("_h"))
-        .select(F.col("_row.*"), (F.col("_h") == 1).alias(out_col))
-    )
 
 
 def bloom_contains_udf(df: DataFrame, col: str, words: list[int],

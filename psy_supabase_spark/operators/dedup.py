@@ -233,12 +233,8 @@ def ngram_jaccard_pairs(
     # exchange.  With the hint the executed plan runs one query stage
     # fewer (8 vs 9) and cold-JVM cpu drops 36.2 → 33.0 cpu-s (min-of-3
     # walls 7.01 → 6.26 s); at corpus scale the planner picks SMJ here
-    # anyway.  SPARK_GRAFT_MINHASH_MERGE_HINT=0 disables (the A/B
-    # lever; evidence in adjudicate_minhash_r15.json).
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_MINHASH_MERGE_HINT", "1") != "0":
-        b = b.hint("merge")
+    # anyway (evidence in adjudicate_minhash_r15.json).
+    b = b.hint("merge")
     cand_grams = (
         a.join(b, "gram")
         .where(F.col("id_a") < F.col("id_b"))
@@ -434,7 +430,7 @@ def minhash_lsh_pairs(
     # branch between the window and the join changes the b-side subtree,
     # so the exchanges never canonicalize equal), and the cold-JVM A/B
     # under the driver bench's protocol (fresh JVM, probe, min of 3,
-    # noop sink; tools/adjudicate_minhash_hint.py) measured the hint at
+    # noop sink) measured the hint at
     # 5.81 s vs 4.11 s without — the r14 driver regression reproduced.
     # At corpus scale the planner picks SMJ by size anyway, so dropping
     # the hint costs nothing at 100 TB and wins at every measured SF
@@ -667,14 +663,6 @@ def simhash_neardup_pairs(
         .where((F.col("id_a") < F.col("id_b")) & (ham <= max_hamming))
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", ham.cast("bigint").alias("hamming"))
-    )
-
-
-# ---- kept for array-shaped callers (api/tests); row path above is the hot one
-def gram_sets(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    grams = F.array_distinct(hashing.word_ngrams(TX.tokenize(F.col(text_col)), NGRAM_N))
-    return docs.select(F.col(id_col).alias("id"), grams.alias("grams")).withColumn(
-        "n_grams", F.size("grams")
     )
 
 

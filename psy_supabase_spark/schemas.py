@@ -57,21 +57,6 @@ METADATA_STRUCT = T.StructType(
 )
 
 
-def knowledge_base_schema(dim: int = EMBEDDING_DIM_DEFAULT) -> T.StructType:
-    """Reference `knowledge_base` (query.txt:79-85) with a native array
-    embedding column — no `"[0.1,...]"` string round-trip (the reference
-    serializes vectors to text, database.py:394-399; native arrays make the
-    codec disappear and keep cosine math JVM-side)."""
-    return T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("user_id", T.StringType(), False),
-            T.StructField("content", T.StringType(), True),
-            T.StructField("embedding", T.ArrayType(T.FloatType(), containsNull=False), True),
-        ]
-    )
-
-
 # ---- driver testdata tables (TESTDATA.md) ----
 TESTDATA_TABLES = (
     "region",

@@ -55,6 +55,32 @@ def sanitize_tenant_id(user_id: str) -> str:
     return s[:63]
 
 
+def _swap_in(fs, hpath, live: str, new: str, aside: str) -> None:
+    """Replace dir ``live`` with dir ``new`` on Hadoop filesystem ``fs``:
+    rename ``live`` aside, rename ``new`` in, and delete the aside copy
+    only once ``new`` is in place, so no step can leave the rows in no
+    directory.  Hadoop's rename and delete report failure by returning
+    false; each result is checked, and a failure raises ``OSError``
+    naming the directory that holds the rows.  A second rename failure
+    moves the aside copy back to ``live`` first, so the tenant's scan
+    still sees every row."""
+    if fs.exists(hpath(aside)):
+        # left by an interrupted swap: it may hold the only copy of rows
+        raise OSError(f"compaction: {aside} exists; resolve it against {live} first")
+    if not fs.rename(hpath(live), hpath(aside)):
+        raise OSError(f"compaction: could not move {live} aside; it is unchanged")
+    if not fs.rename(hpath(new), hpath(live)):
+        if fs.rename(hpath(aside), hpath(live)):
+            raise OSError(
+                f"compaction: could not move {new} in; the rows are back at {live}"
+            )
+        raise OSError(f"compaction: could not move {new} in; the rows are at {aside}")
+    if not fs.delete(hpath(aside), True):
+        raise OSError(
+            f"compaction: {live} is compacted but its old copy {aside} was not deleted"
+        )
+
+
 class TenantStore:
     """Partition-per-tenant parquet store for the two reference tables."""
 
@@ -216,25 +242,24 @@ class TenantStore:
         Postgres absorbs in heap pages but a parquet lake turns into
         thousands of KB-sized files whose open/footer cost comes to
         dominate scan time (the classic small-file problem; on
-        Delta/Iceberg this is OPTIMIZE / rewrite_data_files).  The
-        generic `operators.scale.compact_partitions` is NOT usable
-        here: it rewrites the table flat, destroying the ``user_id=``
-        partition layout this store's pruning depends on.
+        Delta/Iceberg this is OPTIMIZE / rewrite_data_files).  This is
+        the store's one compaction.
 
         Compacts each tenant partition IN PLACE: read the partition
         dir (merged footers — legacy and stamped files coexist),
         rewrite to ``ceil(rows / target_rows_per_file)`` files in a
         dot-prefixed sibling dir (parquet readers ignore hidden dirs,
         so a concurrent scan keeps seeing the old files until the
-        swap), then delete-and-rename through the path's own Hadoop
+        swap), then swap it in through the path's own Hadoop
         filesystem (cluster-correct: works on s3a://, hdfs://, not
-        just the driver's local disk).  The swap is NOT transactional
-        — parquet has no commit protocol; run under the store's
-        one-writer-per-tenant contract (Delta/Iceberg would make this
-        step ACID).  Row content, stored ordinals, and scan results
-        are byte-identical before/after (everything downstream orders
-        by stored columns, never file position).  Returns the data
-        file count across the compacted partitions."""
+        just the driver's local disk; see :func:`_swap_in` for the
+        step order and what each failure leaves behind).  The swap is
+        NOT transactional — parquet has no commit protocol; run under
+        the store's one-writer-per-tenant contract (Delta/Iceberg
+        would make this step ACID).  Row content, stored ordinals, and
+        scan results are byte-identical before/after (everything
+        downstream orders by stored columns, never file position).
+        Returns the data file count across the compacted partitions."""
         import math
 
         spark = self.spark
@@ -263,8 +288,7 @@ class TenantStore:
             n_files = max(1, math.ceil(n_rows / target_rows_per_file))
             tmp = f"{self._path(table)}/.compact_{part}"
             df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-            fs.delete(hpath(src), True)
-            fs.rename(hpath(tmp), hpath(src))
+            _swap_in(fs, hpath, src, tmp, f"{self._path(table)}/.old_{part}")
             total_files += sum(
                 1
                 for st in fs.listStatus(hpath(src))

@@ -1141,6 +1141,53 @@ def test_tenant_store_compact_preserves_layout_and_rows(spark, tmp_path):
     assert TenantStore(spark, str(tmp_path / "wh_none")).compact("interactions") == 0
 
 
+def test_tenant_store_compact_failed_swap_keeps_every_row(spark, tmp_path, monkeypatch):
+    """When the rename that moves the compacted dir in fails, the swap
+    moves the old partition back and raises naming it: the tenant still
+    scans every row, and a later compaction succeeds."""
+    from psy_supabase_spark.sources import tenancy
+
+    class _SecondRenameFails:
+        def __init__(self, fs):
+            self._fs, self.renames = fs, 0
+
+        def rename(self, src, dst):
+            self.renames += 1
+            return self.renames != 2 and self._fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    store = tenancy.TenantStore(spark, str(tmp_path / "wh_swap"))
+    for i in range(3):
+        store.append(
+            "interactions",
+            spark.createDataFrame(
+                [(None, f"q{i}", f"a{i}", None)],
+                "context string, question string, answer string, metadata string",
+            ),
+            user_id="alice",
+            ordinal_col="interaction_id",
+        )
+    before = sorted(
+        (r.question, r.interaction_id)
+        for r in store.scan("interactions", user_id="alice").collect()
+    )
+    swap = tenancy._swap_in
+    monkeypatch.setattr(
+        tenancy, "_swap_in", lambda fs, *a: swap(_SecondRenameFails(fs), *a)
+    )
+    with pytest.raises(OSError, match="rows are back at .*user_id=alice"):
+        store.compact("interactions", user_id="alice")
+    after = sorted(
+        (r.question, r.interaction_id)
+        for r in store.scan("interactions", user_id="alice").collect()
+    )
+    assert after == before
+    monkeypatch.setattr(tenancy, "_swap_in", swap)
+    assert store.compact("interactions", user_id="alice") == 1
+
+
 def test_tenant_store_compact_mixed_warehouse(spark, tmp_path):
     """Compacting a MIXED warehouse (legacy pre-ordinal files + stamped
     files) merges footers into uniform compacted files and leaves

@@ -69,32 +69,29 @@ def test_no_false_negatives_and_priced_fp(spark):
 
 
 def test_tiers_row_identical(spark):
+    """The literal and numpy tiers give the same verdict on every row,
+    false positives included."""
     words = bloom.bloom_build(_df(spark, BUILD), "url", M, K)
-    words_df = bloom.bloom_build_words(_df(spark, BUILD), "url", M, K)
     df = _df(spark, PROBE)
     lit_rows = df.select(
         "url", bloom.bloom_contains_expr("url", words, M, K).alias("bloom_hit")
     )
     np_rows = bloom.bloom_contains_udf(df, "url", words, M, K)
-    join_rows = bloom.bloom_contains_join(df, "url", words_df, M, K)
     want = sorted(map(tuple, lit_rows.collect()))
     assert want == sorted(map(tuple, np_rows.collect()))
-    assert want == sorted(map(tuple, join_rows.collect()))
 
 
 def test_join_tier_null_keys_and_extra_columns(spark):
-    """Null keys verdict null in every tier; the join tier preserves
-    arbitrary extra columns through the _row struct."""
+    """Null keys verdict null in every tier; the numpy tier keeps the
+    frame's other columns."""
     words = bloom.bloom_local(BUILD, M, K)
-    words_df = bloom.bloom_build_words(_df(spark, BUILD), "url", M, K)
     df = spark.createDataFrame(
         [(BUILD[0], 1), (None, 2), ("http://never.example/x", 3)],
         "url string, tag int",
     )
-    got = {
-        r.tag: r.bloom_hit
-        for r in bloom.bloom_contains_join(df, "url", words_df, M, K).collect()
-    }
+    np_rows = bloom.bloom_contains_udf(df, "url", words, M, K)
+    assert np_rows.columns == ["url", "tag", "bloom_hit"]
+    got = {r.tag: r.bloom_hit for r in np_rows.collect()}
     lit = {
         r.tag: r.h
         for r in df.select(
@@ -102,16 +99,6 @@ def test_join_tier_null_keys_and_extra_columns(spark):
         ).collect()
     }
     assert got == lit and got[1] is True and got[2] is None
-
-
-def test_join_tier_plan_broadcast_no_python(spark):
-    """The join tier's plan is a broadcast hash join with zero Python
-    stages (the r11 gap: mid-size probes paid per-row hashlib)."""
-    words_df = bloom.bloom_build_words(_df(spark, BUILD), "url", M, K)
-    out = bloom.bloom_contains_join(_df(spark, PROBE), "url", words_df, M, K)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_membership_duckdb_parity(spark):
